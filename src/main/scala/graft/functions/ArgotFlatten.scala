@@ -43,8 +43,8 @@ object ArgotFlatten {
     else "_t"
 
   /** Pure flatten: JSON text → flat multi-valued map.  Invalid JSON or
-    * non-object roots yield an empty map (soft error — callers count
-    * them via [[flattenCounted]] / ErrorCollector if they care).
+    * non-object roots yield an empty map (soft error — callers that
+    * count them use [[flattenEither]] or [[flattenOrError]]).
     */
   def flatten(json: String): Map[String, Seq[String]] =
     flattenEither(json).getOrElse(Map.empty)
@@ -104,15 +104,20 @@ object ArgotFlatten {
     (c: Column) => f(c)
   }
 
-  /** Parse-failure reason column: null when the content flattens
-    * cleanly, the reason text otherwise.  Lets callers count soft
-    * errors with an ordinary (exact, deterministic) aggregation —
+  /** Flatten and parse-failure reason in one column, from ONE parse:
+    * a struct `(_1: flat map, _2: reason)` — `_2` is null and `_1` the
+    * flat map when the content flattens cleanly, `_1` is null and `_2`
+    * the reason otherwise.  Lets callers both build documents and count
+    * soft errors with an ordinary (exact, deterministic) aggregation —
     * accumulators inside transformations over-count whenever the plan
     * evaluates rows more than once (e.g. range-partition sampling
     * before a chunked write), so they are kept for diagnostics only.
     */
-  val parseError: Column => Column = {
-    val f = udf((s: String) => flattenEither(s).left.toOption.orNull)
+  val flattenOrError: Column => Column = {
+    val f = udf((s: String) => flattenEither(s) match {
+      case Right(m) => (m, null: String)
+      case Left(e) => (null: Map[String, Seq[String]], e)
+    })
     (c: Column) => f(c)
   }
 }

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Tables
+import graft.sources.ParquetDocSource
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -28,20 +29,14 @@ import org.apache.spark.sql.functions._
   */
 object Reindex {
 
-  /** The scan→filter→project→resume slice over the documents fixture
-    * (doc_id↔id, text↔content, source↔owner; the fixture has no
-    * `deleted` column so that filter is identity here — the JDBC source
-    * keeps it, see sources.JdbcDocSource).
+  /** The scan→filter→project→resume slice over the documents fixture:
+    * exactly what the reindex job's parquet source reads (doc_id↔id,
+    * text↔content, source↔owner, inclusive `id >= startId`; the
+    * fixture has no `deleted` column so that filter is identity here —
+    * the JDBC source keeps it, see sources.JdbcDocSource).
     */
-  def scanSlice(spark: SparkSession, dir: String, startId: String = ""): DataFrame = {
-    val base = Tables.documents(spark, dir)
-      .select(
-        col("doc_id").cast("string").as("id"),
-        col("doc_id").cast("string").as("txn_id"),
-        col("source").as("owner"),
-        col("text").as("content"))
-    if (startId.isEmpty) base else base.filter(col("id") >= startId)
-  }
+  def scanSlice(spark: SparkSession, dir: String, startId: String = ""): DataFrame =
+    new ParquetDocSource(s"$dir/documents.parquet", startId).load(spark)
 
   /** Resume-aware ordered scan with deterministic chunk assignment:
     * every output row carries its chunk index (size `chunkSize`,

@@ -64,46 +64,43 @@ object ReindexJob {
       return Left(Seq(s"another reindex holds ${lock.path}" +
         lock.holderPid.map(p => s" (pid $p)").getOrElse("")))
     try {
-      // scan → (source applies NOT-deleted + resume) → flatten+suffix.
-      // Records whose content fails to flatten are SKIPPED (not
-      // indexed) and exactly counted — shipping an empty flat map to
-      // the sink would plant broken documents in the index.  The
-      // flattened map rides along as a column so the sink's NDJSON
-      // serialization carries the Solr dynamic fields.
-      val docs = source.load(spark)
-        .withColumn("err", ArgotFlatten.parseError(col("content")))
-      val clean = docs.filter(col("err").isNull).drop("err")
-        .withColumn("flat", ArgotFlatten.flattenArgot(col("content")))
+      // scan → (source applies NOT-deleted + resume) → flatten+suffix,
+      // one parse per record: the flat map and the parse-failure reason
+      // come out of the same call.  Records whose content fails to
+      // flatten are SKIPPED (not indexed) and exactly counted — shipping
+      // an empty flat map to the sink would plant broken documents in
+      // the index.  The flattened map rides along as a column so the
+      // sink's NDJSON serialization carries the Solr dynamic fields.
+      val parsed = source.load(spark)
+        .withColumn("parsed", ArgotFlatten.flattenOrError(col("content")))
+        .withColumn("flat", col("parsed._1"))
+        .withColumn("err", col("parsed._2"))
+        .drop("parsed")
       // authority enrichment (O8) between flatten and sink — the
-      // reference's `argot ingest -a --redis-url` step.  The enriched
-      // frame is persisted so the sink's range-partition SAMPLING pass
-      // reads the cache instead of re-running the mapPartitions
-      // lookups — without it every reindex run doubles the mget load
-      // on the external store (a scan of local cache is cheaper than a
-      // second full round-trip sweep of a KV cluster).
-      val toSink = store.map(_.enrich(clean).persist()).getOrElse(clean)
-      val written =
-        try sink.write(toSink)
-        finally if (store.isDefined) { toSink.unpersist(); () }
-      // Exact soft-error surfacing (fixes reference B10): parse
-      // failures are counted with a dedicated aggregation — an
-      // accumulator inside the flatten would over-count whenever the
-      // sink's range-partition sampling evaluates the plan twice.
-      val errDf = docs.filter(col("err").isNotNull).select(col("id"), col("err"))
-        .persist() // count + sample below: one scan/parse, not two
-      val (parseErrors, parseSamples) =
-        try {
-          val n = errDf.count()
-          val samples =
-            if (n == 0) Seq.empty[String]
-            else errDf.orderBy(col("id")).limit(5).collect()
-              .map(r => s"doc ${r.getString(0)}: ${r.getString(1)}").toSeq
-          (n, samples)
-        } finally { errDf.unpersist(); () }
-      val sinkErrCount = sinkErrors.map(_.count).getOrElse(0L)
-      val sinkSamples = sinkErrors.map(_.report).getOrElse(Seq.empty)
-      Right(Result(written, parseErrors + sinkErrCount,
-        parseSamples ++ sinkSamples, sink.checkpoint()))
+      // reference's `argot ingest -a --redis-url` step.  The one pin:
+      // the sink's range-partition sampling pass, its delivery pass and
+      // the soft-error count below all read this cache, so the source
+      // is scanned, parsed and (with a store) looked up once per run —
+      // without it every pass would re-scan the source, re-parse every
+      // record and repeat the mget sweep against the external store.
+      val pinned = store.map(_.enrich(parsed)).getOrElse(parsed).persist()
+      try {
+        val written = sink.write(pinned.filter(col("err").isNull).drop("err"))
+        // Exact soft-error surfacing (fixes reference B10): parse
+        // failures are counted with an ordinary aggregation over the
+        // pin — an accumulator inside the flatten would over-count
+        // whenever the sink's sampling evaluates the plan twice.
+        val errs = pinned.filter(col("err").isNotNull).select(col("id"), col("err"))
+        val parseErrors = errs.count()
+        val parseSamples =
+          if (parseErrors == 0) Seq.empty[String]
+          else errs.orderBy(col("id")).limit(5).collect()
+            .map(r => s"doc ${r.getString(0)}: ${r.getString(1)}").toSeq
+        val sinkErrCount = sinkErrors.map(_.count).getOrElse(0L)
+        val sinkSamples = sinkErrors.map(_.report).getOrElse(Seq.empty)
+        Right(Result(written, parseErrors + sinkErrCount,
+          parseSamples ++ sinkSamples, sink.checkpoint()))
+      } finally { pinned.unpersist(); () }
     } finally lock.release()
   }
 }

@@ -182,13 +182,14 @@ object StatsStore {
     val base = new Path(storeDir)
     val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(base)) return Map.empty
+    // the base is the FIRST group and the version the LAST: a caller's
+    // `baseRe` may carry groups of its own, which shift the arity
     val vRe = s"($baseRe)-v(\\d+)".r
     val lRe = s"($baseRe)".r
     fs.listStatus(base).iterator.map(_.getPath.getName)
-      .flatMap {
-        case vRe(b, v) => Some((b, v.toInt))
-        case lRe(b) => Some((b, 0))
-        case _ => None
+      .flatMap { n =>
+        vRe.unapplySeq(n).map(g => (g.head, g.last.toInt))
+          .orElse(lRe.unapplySeq(n).map(g => (g.head, 0)))
       }.toSeq
       .groupBy(_._1).map { case (b, vs) =>
         val mx = vs.iterator.map(_._2).max

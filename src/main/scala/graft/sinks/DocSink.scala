@@ -1,7 +1,7 @@
 package graft.sinks
 
 import graft.util.{ErrorCollector, HealthCheck}
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Observation, Row}
 import org.apache.spark.sql.functions._
 
 /** Document sinks (reference O9/O6): chunked, idempotent-by-id,
@@ -38,14 +38,45 @@ trait DocSink extends HealthCheck {
   def writeBatch(df: DataFrame, batchId: Long): Long = write(df)
 }
 
-/** Shared machinery for chunked directory sinks.  Spark-native
-  * chunking: repartitionByRange on id (range partitioner ⇒
-  * id-contiguous partitions, no global sort barrier) +
-  * sortWithinPartitions + `maxRecordsPerFile` ⇒ every output file
-  * holds ≤ chunkSize id-ordered records, and Spark never creates an
-  * empty file (B8 impossible by construction).
+/** The chunk-order and checkpoint contract both sinks share, in one
+  * place: repartitionByRange on id (range partitioner ⇒ id-contiguous
+  * partitions, no global sort barrier) + sortWithinPartitions ⇒ each
+  * partition delivers its rows in id order, and chunks cut from it in
+  * order are id-contiguous.
+  *
+  * The row count and the checkpoint ride the sink's own action via
+  * observe(): a post-write df.agg would re-execute the whole upstream
+  * pipeline (at 100 TB, a second source scan per write).  The observe
+  * node sits ABOVE the range exchange: the range partitioner's
+  * sampling pass evaluates only the exchange's child, so the metrics
+  * count each delivered row exactly once.
   */
-sealed abstract class ChunkedDirSink(outDir: String, chunkSize: Int, partitions: Int)
+private[sinks] final class IdOrdered(df: DataFrame) {
+  require(df.columns.contains("id"), "DocSink frames carry an id column")
+  private val obs = Observation("graft-sink-" + java.util.UUID.randomUUID)
+
+  /** The frame to run the sink's one action on. */
+  val rows: DataFrame =
+    df.repartitionByRange(df.sparkSession.sparkContext.defaultParallelism, col("id"))
+      .sortWithinPartitions("id")
+      .observe(obs, count(lit(1)).as("n"), max(col("id")).as("m"))
+
+  /** (rows delivered, max id) — call only after the action on [[rows]]
+    * completed; null max ⇒ no rows, no checkpoint.
+    */
+  def result(): (Long, Option[String]) = {
+    val m = obs.get
+    (m("n").asInstanceOf[Long], Option(m("m").asInstanceOf[String]))
+  }
+}
+
+/** Shared machinery for chunked directory sinks: [[IdOrdered]] +
+  * `maxRecordsPerFile` ⇒ every output file holds ≤ chunkSize
+  * id-ordered records, and Spark never creates an empty file (B8
+  * impossible by construction).  The write fan-out is the session's
+  * defaultParallelism, so it scales with the cluster.
+  */
+sealed abstract class ChunkedDirSink(outDir: String, chunkSize: Int)
     extends DocSink {
 
   /** DataFrameWriter format name ("json", "parquet"). */
@@ -56,27 +87,13 @@ sealed abstract class ChunkedDirSink(outDir: String, chunkSize: Int, partitions:
   private var lastMax: Option[String] = None
 
   override def write(df: DataFrame): Long = {
-    // partitions=0 → derive from the cluster (defaultParallelism), so
-    // the write fan-out scales with the session instead of a constant
-    val nParts = if (partitions > 0) partitions
-      else df.sparkSession.sparkContext.defaultParallelism
-    require(df.columns.contains("id"), "DocSink frames carry an id column")
-    // count + checkpoint ride the write itself via observe(): a
-    // post-write df.agg would re-execute the whole upstream pipeline
-    // (at 100 TB, a second source scan per write).  The observe node
-    // sits ABOVE the range exchange: the range partitioner's sampling
-    // pass evaluates only the exchange's child, so the metrics count
-    // each written row exactly once.
-    val obs = org.apache.spark.sql.Observation("graft-sink-" + java.util.UUID.randomUUID)
-    df.repartitionByRange(nParts, col("id"))
-      .sortWithinPartitions("id")
-      .observe(obs, count(lit(1)).as("n"), max(col("id")).as("m"))
-      .write.mode("overwrite")
+    val ordered = new IdOrdered(df)
+    ordered.rows.write.mode("overwrite")
       .option("maxRecordsPerFile", chunkSize.toLong)
       .format(fmt).save(outDir)
-    val m = obs.get
-    lastMax = Option(m("m").asInstanceOf[String])
-    m("n").asInstanceOf[Long]
+    val (n, m) = ordered.result()
+    lastMax = m
+    n
   }
 
   override def checkpoint(): Option[String] = lastMax
@@ -104,12 +121,12 @@ sealed abstract class ChunkedDirSink(outDir: String, chunkSize: Int, partitions:
   * NDJSON — fixes reference B6, which concatenated raw content with no
   * separator).
   */
-final class NdjsonDirSink(outDir: String, chunkSize: Int, partitions: Int = 0)
-    extends ChunkedDirSink(outDir, chunkSize, partitions) {
+final class NdjsonDirSink(outDir: String, chunkSize: Int)
+    extends ChunkedDirSink(outDir, chunkSize) {
   override def name: String = s"ndjson-dir:$outDir"
   override protected def fmt: String = "json"
   override protected def make(dir: String): ChunkedDirSink =
-    new NdjsonDirSink(dir, chunkSize, partitions)
+    new NdjsonDirSink(dir, chunkSize)
 }
 
 /** Columnar parquet sink with the same chunking/resume contract as the
@@ -117,30 +134,12 @@ final class NdjsonDirSink(outDir: String, chunkSize: Int, partitions: Int = 0)
   * predicate-pushdown-able on re-read), for pipelines whose next stage
   * is another engine job rather than Solr.
   */
-final class ParquetDirSink(outDir: String, chunkSize: Int, partitions: Int = 0)
-    extends ChunkedDirSink(outDir, chunkSize, partitions) {
+final class ParquetDirSink(outDir: String, chunkSize: Int)
+    extends ChunkedDirSink(outDir, chunkSize) {
   override def name: String = s"parquet-dir:$outDir"
   override protected def fmt: String = "parquet"
   override protected def make(dir: String): ChunkedDirSink =
-    new ParquetDirSink(dir, chunkSize, partitions)
-}
-
-/** Asciibetical max over string ids, merged across tasks — the
-  * checkpoint computed in the delivery pass itself.  null = no rows.
-  */
-private[sinks] final class MaxStringAccumulator
-    extends org.apache.spark.util.AccumulatorV2[String, String] {
-  private var _max: String = null
-  override def isZero: Boolean = _max == null
-  override def copy(): MaxStringAccumulator = {
-    val c = new MaxStringAccumulator; c._max = _max; c
-  }
-  override def reset(): Unit = _max = null
-  override def add(v: String): Unit =
-    if (v != null && (_max == null || v > _max)) _max = v
-  override def merge(o: org.apache.spark.util.AccumulatorV2[String, String]): Unit =
-    add(o.value)
-  override def value: String = _max
+    new ParquetDirSink(dir, chunkSize)
 }
 
 /** Transport abstraction for the Solr-style sink: prod wires an HTTP
@@ -187,24 +186,14 @@ final class BatchedUpsertSink(
   private var lastMax: Option[String] = None
 
   override def write(df: DataFrame): Long = {
-    val spark = df.sparkSession
-    val sent = spark.sparkContext.longAccumulator("graft-sink-sent")
-    // checkpoint from per-partition maxima gathered in the SAME pass
-    // that delivers the rows — a post-write df.agg(max) would execute
-    // the whole upstream pipeline a second time.  Accumulator updates
-    // happen inside the action (exactly-once on task success), and max
-    // is idempotent under retry anyway.
-    val maxId = new MaxStringAccumulator
-    spark.sparkContext.register(maxId, "graft-sink-maxid")
+    val sent = df.sparkSession.sparkContext.longAccumulator("graft-sink-sent")
     val errs = errors
     val t = transport
     val size = chunkSize
-    val nParts = df.sparkSession.sparkContext.defaultParallelism
-    df.select(col("id"), to_json(struct(df.columns.map(col): _*)).as("doc"))
-      .repartitionByRange(nParts, col("id"))
-      .sortWithinPartitions("id")
+    val ordered = new IdOrdered(df)
+    ordered.rows.select(col("id"), to_json(struct(df.columns.map(col): _*)).as("doc"))
       .foreachPartition { rows: Iterator[Row] =>
-        rows.map { r => maxId.add(r.getString(0)); (r.getString(0), r.getString(1)) }
+        rows.map(r => (r.getString(0), r.getString(1)))
           .grouped(size)
           .foreach { batch =>
             val clean = errs match {
@@ -214,7 +203,7 @@ final class BatchedUpsertSink(
             if (clean.nonEmpty) { t.send(clean); sent.add(clean.size.toLong) }
           }
       }
-    lastMax = Option(maxId.value)
+    lastMax = ordered.result()._2
     sent.value
   }
 

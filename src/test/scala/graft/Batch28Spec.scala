@@ -437,6 +437,23 @@ class Batch28Spec extends SparkSuite {
     } finally graft.util.Fs.deleteRecursively(store)
   }
 
+  test("artifactDirs: a base regex with its own capture groups resolves like one without") {
+    val store = java.nio.file.Files.createTempDirectory("graft-spec-store-groups")
+    try {
+      Seq("epoch-000-v1", "epoch-000-v2", "epoch-001", "other-v3")
+        .foreach(n => new java.io.File(store.toFile, n).mkdirs())
+      def served(baseRe: String): Map[String, String] =
+        graft.plans.StatsStore.artifactDirs(spark, store.toString, baseRe)
+          .map { case (b, dir) => b -> new java.io.File(dir).getName }
+      val expected = Map("epoch-000" -> "epoch-000-v2", "epoch-001" -> "epoch-001")
+      assert(served("epoch-\\d+") == expected)
+      // extra groups shift the extractor arity; the base is still the
+      // first group and the version the last
+      assert(served("(epoch)-(\\d+)") == expected)
+      assert(served("(ep(och))-\\d+") == expected)
+    } finally graft.util.Fs.deleteRecursively(store)
+  }
+
   test("one publish, many consumers: two registrations off one store, both plans filtered; stored column stats == fresh ANALYZE") {
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
     val store = java.nio.file.Files.createTempDirectory("graft-spec-store-amort")

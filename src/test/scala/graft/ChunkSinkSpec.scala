@@ -26,7 +26,7 @@ class ChunkSinkSpec extends SparkSuite {
 
   test("parquet sink: chunk contract holds and a re-read round-trips exactly") {
     val out = tmp("graft-pq")
-    val sink = new ParquetDirSink(out.toString + "/out", chunkSize = 64, partitions = 4)
+    val sink = new ParquetDirSink(out.toString + "/out", chunkSize = 64)
     assert(sink.write(docsDf) == 500)
     assert(sink.checkpoint().contains("99"))
     val files = Files.walk(out.resolve("out")).iterator.asScala
@@ -44,7 +44,7 @@ class ChunkSinkSpec extends SparkSuite {
 
   test("ndjson sink: every chunk file has 1..chunkSize records, total preserved") {
     val out = tmp("graft-chunks")
-    val sink = new NdjsonDirSink(out.toString + "/out", chunkSize = 64, partitions = 4)
+    val sink = new NdjsonDirSink(out.toString + "/out", chunkSize = 64)
     val written = sink.write(docsDf)
     assert(written == 500)
     val sizes = jsonFiles(out.resolve("out")).map(f => Files.readAllLines(f).size)
@@ -55,7 +55,7 @@ class ChunkSinkSpec extends SparkSuite {
   test("ndjson sink: exact multiple of chunkSize leaves no empty chunk (B8)") {
     val out = tmp("graft-exact")
     val df = docsDf.limit(100) // 100 = 4 chunks of 25 exactly
-    val sink = new NdjsonDirSink(out.toString + "/out", chunkSize = 25, partitions = 2)
+    val sink = new NdjsonDirSink(out.toString + "/out", chunkSize = 25)
     sink.write(df)
     val sizes = jsonFiles(out.resolve("out")).map(f => Files.readAllLines(f).size)
     assert(sizes.sum == 100)
@@ -64,7 +64,7 @@ class ChunkSinkSpec extends SparkSuite {
 
   test("ndjson sink: records are well-formed one-per-line JSON (B6) and round-trip") {
     val out = tmp("graft-ndjson")
-    val sink = new NdjsonDirSink(out.toString + "/out", chunkSize = 200, partitions = 2)
+    val sink = new NdjsonDirSink(out.toString + "/out", chunkSize = 200)
     sink.write(docsDf)
     val back = new NdjsonDocSource(out.toString + "/out").load(spark)
     assert(back.count() == 500)
@@ -100,6 +100,18 @@ class ChunkSinkSpec extends SparkSuite {
     assert(sink.checkpoint().contains("99"))
   }
 
+  test("batched upsert sink: an empty frame sends nothing and leaves no checkpoint") {
+    BatchCollector.reset()
+    val sink = new BatchedUpsertSink(BatchCollector, chunkSize = 64)
+    // a runtime-empty frame and one the optimizer can prove empty: the
+    // checkpoint's observed metrics must arrive for both (a missing
+    // metrics row would block the write forever)
+    assert(sink.write(docsDf.filter(col("id") === "no-such-id")) == 0)
+    assert(sink.write(docsDf.limit(0)) == 0)
+    assert(BatchCollector.sizes().isEmpty, "no batch for no rows")
+    assert(sink.checkpoint().isEmpty, "no rows delivered → no checkpoint")
+  }
+
   test("sink accounting is single-pass: count/checkpoint do not re-execute the input") {
     // Count upstream evaluations per row.  The range partitioner's
     // sampling pass reads every input row once, the write/delivery
@@ -113,7 +125,7 @@ class ChunkSinkSpec extends SparkSuite {
 
     val a1 = spark.sparkContext.longAccumulator("evals-dir")
     val out = tmp("graft-onepass")
-    val dirSink = new NdjsonDirSink(out.toString + "/out", chunkSize = 50, partitions = 2)
+    val dirSink = new NdjsonDirSink(out.toString + "/out", chunkSize = 50)
     assert(dirSink.write(metered(a1)) == 100)
     assert(dirSink.checkpoint().contains("99"))
     assert(a1.value <= 200L, s"input evaluated ${a1.value / 100.0}x; expected ≤2x")

@@ -3,7 +3,8 @@ package graft
 import graft.config.ReindexConfig
 import graft.operators.{ReindexJob, SkewJoin, Similarity}
 import graft.sinks.NdjsonDirSink
-import graft.sources.{DocSource, JdbcDocSource, ParquetDocSource}
+import graft.sources.{DocSource, InMemoryKvTransport, JdbcDocSource, KvAuthorityStore,
+  ParquetDocSource}
 import graft.util.Lockfile
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
@@ -73,6 +74,42 @@ class ReindexJobSpec extends SparkSuite {
     assert(res.docsWritten == 8, "malformed docs are skipped, not written")
     assert(res.softErrors == 2, res)
     assert(res.errorSamples.exists(_.contains("doc 4:")))
+  }
+
+  test("each source row is evaluated exactly once per run, with and without a store") {
+    val out = Files.createTempDirectory("graft-once")
+    val src = out.toString + "/docs.parquet"
+    // 90 valid docs + 10 malformed: the sink, the soft-error count and
+    // the samples all have rows to read
+    (0 until 100).map(i =>
+        (i.toString, s"src${i % 4}",
+         if (i % 10 == 7) s"{broken $i" else s"""{"title":"doc $i","n":$i}"""))
+      .toDF("doc_id", "source", "text").write.parquet(src)
+    // counts every evaluation of a source row: a row read by two passes
+    // (a second scan, or an uncached re-execution) counts twice
+    def metered(acc: org.apache.spark.util.LongAccumulator): DocSource = new DocSource {
+      override def name: String = "metered"
+      override def load(s: org.apache.spark.sql.SparkSession) = {
+        val a = acc // a local, so the closure does not drag in this source
+        new ParquetDocSource(src).load(s)
+          .as[(String, String, String, String)]
+          .map { t => a.add(1); t }
+          .toDF("id", "txn_id", "owner", "content")
+      }
+      override def healthCheck(): Either[String, Unit] = Right(())
+    }
+    val store = new KvAuthorityStore(new InMemoryKvTransport(Map("src0" -> "Zero")))
+    Seq(("no-store", conf, None), ("kv-store", conf.copy(authorities = true), Some(store)))
+      .foreach { case (label, c, st) =>
+        val evals = spark.sparkContext.longAccumulator(s"evals-$label")
+        val sink = new NdjsonDirSink(s"$out/out-$label", chunkSize = 30)
+        val r = ReindexJob.run(spark, c, metered(evals), sink,
+          Lockfile.default(out.toString), None, st).toOption.get
+        assert(r.docsWritten == 90 && r.softErrors == 10, s"$label: $r")
+        assert(r.errorSamples.size == 5 && r.errorSamples.head.startsWith("doc 17:"), label)
+        assert(evals.value == 100L,
+          s"$label: source rows evaluated ${evals.value / 100.0}x per run; expected 1x")
+      }
   }
 
   test("CLI main: config → pipeline → exit code reflects soft errors (B10 fix)") {
